@@ -3,8 +3,6 @@
 Reads pickled messages on stdin: first ``(docs, analyzer, top_k)``, then
 lists of queries, then ``None``. Builds ``OracleIndex`` over ``docs`` and
 answers each list with the oracle's top-k per query, pickled on stdout.
-Runs at the lowest CPU priority: while the engine's index builds, it
-only takes cycles the build leaves idle.
 """
 
 from __future__ import annotations
@@ -19,7 +17,6 @@ from cs_search_engine_architecture_spark.oracle.reference import OracleIndex  # 
 
 
 def main() -> None:
-    os.nice(19)
     inp, out = sys.stdin.buffer, sys.stdout.buffer
     docs, analyzer, top_k = pickle.load(inp)
     oracle = OracleIndex([(d, [p, c]) for d, p, c in docs], analyzer=analyzer)

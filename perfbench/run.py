@@ -48,7 +48,6 @@ def _session(cores: int):
     java_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ["JAVA_TOOL_OPTIONS"] = " ".join(
         filter(None, (os.environ.get("JAVA_TOOL_OPTIONS"), java_opts)))
-    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     spark = get_spark(
         app_name="perfbench",
         master=f"local[{cores}]",

@@ -31,11 +31,10 @@ FIELDS = ["path", "content"]
 ANALYZER = "reference"
 TOP_K = 10
 BUILD_DOCS = 20_000     # build workload corpus
-WARM_DOCS = 300         # warm build before the timed builds
+PROBE_DOCS = 300        # docs the build workload's tokenizer probe reads
 SERVE_DOCS = 17_000     # serve index: above the engine's 1M-posting WAND gate
 WAND_GATE_POSTINGS = 1_000_000
 SCORE_TOL = 1e-4
-WARM_CLASSES = ("single_head", "or", "and", "phrase")  # one per base route
 BASE_ROUTES = ("single_term_blockmax", "wand_or_sharded", "wand_and_sharded", "join")
 PHASES = ("tokenize_stage", "global_stats", "term_stats_write",
           "score_encode_write", "doc_lens_write")
@@ -113,13 +112,12 @@ def _collect_docs(corpus, where: str | None = None) -> list[tuple[int, str, str]
 
 def run_build(ctx: Ctx) -> dict:
     tr = ctx.tr
+    # no warm build: a build wall hardly depends on the corpus size, so a
+    # warm build would cost about as much as the timed one. The timed
+    # build is the first in its session, as in jobs/build_index.py.
     with tr.span("setup") as setup:
         with tr.span("setup.corpus"):
             corpus = _gen_corpus(ctx, BUILD_DOCS)
-        with tr.span("setup.warm_build"):
-            _build(ctx, corpus.limit(WARM_DOCS), os.path.join(ctx.work, "warm"),
-                   WARM_DOCS)
-    shutil.rmtree(os.path.join(ctx.work, "warm"))
 
     metas: list[dict] = []
     out = os.path.join(ctx.work, "idx")
@@ -154,7 +152,7 @@ def run_build(ctx: Ctx) -> dict:
     }
     layer = None
     if tr.enabled:
-        docs = _collect_docs(corpus, f"doc_id < {WARM_DOCS}")
+        docs = _collect_docs(corpus, f"doc_id < {PROBE_DOCS}")
         corpus.unpersist()
         layer = _layers(ctx, tr.named("build.index")[-1], metas[-1], out, docs,
                         walls, eng=None)
@@ -164,16 +162,23 @@ def run_build(ctx: Ctx) -> dict:
 # ------------------------------------------------------------- serve
 
 
+def _scored(rows) -> list[tuple[int, float]]:
+    """(doc_id, score) in the order the rows came, scores cast to the
+    float32 the engine stores them in."""
+    return [(r["doc_id"], float(np.float32(r["score"]))) for r in rows]
+
+
 def _ranked(rows) -> list[tuple[int, float]]:
-    got = [(r["doc_id"], float(np.float32(r["score"]))) for r in rows]
-    return sorted(got, key=lambda t: (-t[1], t[0]))
+    """msearch rows of one query: the engine does not order them per
+    query, so they are ranked by (-score, doc_id) first."""
+    return sorted(_scored(rows), key=lambda t: (-t[1], t[0]))
 
 
 class OracleProcess:
     """``OracleIndex`` over the served corpus in its own process
     (``oracle_worker.py``): it is built, and answers the first cycle's
-    queries, before the timed loop starts, and it is idle (blocked on its
-    pipe) while the loop runs."""
+    queries, during the warm-up, and it is idle (blocked on its pipe)
+    while the timed loop runs."""
 
     def __init__(self, docs):
         worker = os.path.join(os.path.dirname(os.path.abspath(__file__)), "oracle_worker.py")
@@ -225,30 +230,34 @@ def run_serve(ctx: Ctx) -> dict:
     path = os.path.join(ctx.work, "serve_idx")
     with tr.span("setup.corpus"):
         corpus = _gen_corpus(ctx, SERVE_DOCS)
-    # not set-up: the benchmark's own inputs (query stream) and oracle
+    # not set-up: the benchmark's own inputs (corpus rows, query stream)
     docs = _collect_docs(corpus)
+    with tr.span("setup.build"):
+        meta = _build(ctx, corpus, path, SERVE_DOCS)
+    with tr.span("engine.open"):
+        eng = SearchEngine(ctx.spark, path)
+    setup_s = sum(tr.named(n)[0].wall for n in ("setup.corpus", "setup.build", "engine.open"))
+    corpus.unpersist()
+    if meta["num_postings"] < WAND_GATE_POSTINGS:
+        raise RuntimeError(
+            f"serve index has {meta['num_postings']} postings, under the "
+            f"{WAND_GATE_POSTINGS} WAND gate: the routes would not be exercised"
+        )
     gen = QueryGen(docs, ctx.seed, stream=1)
     cycles = [gen.cycle()]
+    # the oracle builds and answers the first cycle while the warm-up
+    # runs, after set-up and before the timed loop
     oracle = OracleProcess(docs)
     try:
         oracle.request(_cycle_queries(cycles[0]))
-        with tr.span("setup.build"):
-            meta = _build(ctx, corpus, path, SERVE_DOCS)
-        with tr.span("engine.open"):
-            eng = SearchEngine(ctx.spark, path)
-        setup_s = sum(tr.named(n)[0].wall for n in ("setup.corpus", "setup.build", "engine.open"))
-        corpus.unpersist()
-        if meta["num_postings"] < WAND_GATE_POSTINGS:
-            raise RuntimeError(
-                f"serve index has {meta['num_postings']} postings, under the "
-                f"{WAND_GATE_POSTINGS} WAND gate: the routes would not be exercised"
-            )
-        # warm-up from a disjoint stream: one query per base route, one batch
-        warm = QueryGen(docs, ctx.seed, stream=2)
+        # warm-up: one cycle from another stream, so every query shape has
+        # run once (plan codegen, Python workers, block cache, the
+        # pre-sharded WAND layout) before timing
+        warm_singles, warm_batch = QueryGen(docs, ctx.seed, stream=2).cycle()
         with tr.span("warmup"):
-            for cls in WARM_CLASSES:
-                eng.search(warm.query(cls), TOP_K).collect()
-            eng.msearch({c: warm.query(c) for c in WARM_CLASSES}, TOP_K).collect()
+            for _, q in warm_singles:
+                eng.search(q, TOP_K).collect()
+            eng.msearch(warm_batch, TOP_K).collect()
         with tr.span("oracle_wait"):
             want = oracle.answers()
         res = _serve_timed(ctx, eng, gen, cycles)
@@ -341,7 +350,7 @@ def _verify_serve(ctx: Ctx, res: dict, want: list) -> None:
         for _ in range(len(CYCLE)):
             cls, q, route, got = next(singles)
             w = next(want)
-            if got is not None and not _same(_ranked(got), w):
+            if got is not None and not _same(_scored(got), w):
                 ctx.fail(f"{cls} query {q!r} ({route}) differs from the oracle")
         by_q: dict[str, list] = {qid: [] for qid in batch}
         for r in rows or []:
