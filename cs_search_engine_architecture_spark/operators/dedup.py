@@ -609,11 +609,15 @@ EMB_DIMS = 64
 
 
 def _emb_with_norm(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v, nrm) rows of the vectors that can pair. A zero-norm
+    vector never pairs: its cosine is undefined (and the ANSI division
+    would raise), so it is dropped here — the fused kernel in
+    ``embedding_dup_pairs_bucketed`` applies the same rule."""
     return emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         F.expr(D.l2_norm(D.SPARK, vec_col)).alias("nrm"),
-    )
+    ).where(F.col("nrm") > 0)
 
 
 def _distinct_shingles(df: DataFrame, text_col: str) -> DataFrame:
@@ -970,7 +974,8 @@ def embedding_dup_pairs_bucketed(
             )
             if ia.size == 0:
                 continue
-            keep = ids[ia] < ids[ja]
+            # a zero-norm vector never pairs (== _emb_with_norm)
+            keep = (ids[ia] < ids[ja]) & (nrm[ia] > 0) & (nrm[ja] > 0)
             if prev is not None:
                 for bp in range(band):
                     keep &= prev[bp][ia] != prev[bp][ja]

@@ -152,44 +152,43 @@ def test_packed_matches_array_path(spark, analyzer):
     assert arr == packed
 
 
-def test_stream_encoder_identical_to_group_encoder(spark, tmp_path):
-    """The mapInArrow streaming encoder and the groupBy/applyInPandas
-    encoder must write IDENTICAL block rows (bytes included) for the
-    same corpus — small Arrow batches force groups to span batch
-    boundaries (the carry path)."""
-    corpus = spark.createDataFrame(
-        [(d, f[0], f[1]) for d, f in DOCS + [(i + 10, QUIRK_DOCS[i % len(QUIRK_DOCS)][1]) for i in range(40)]],
-        "doc_id long, title string, body string",
+# sha256 over the sorted block rows of the seeded corpus below (base
+# build + one add_docs delta); any change to the encoded bytes, the
+# salting or the shard-split layout moves it
+GOLDEN_BLOCKS_SHA256 = (
+    "d37bd059270a94efafcc154fb61dd50e94e7cdd3c8bdea9181e4f374125c49ac"
+)
+
+
+def test_block_bytes_golden(spark, tmp_path):
+    """Pins the block layout and bytes of a base build and an add_docs
+    delta: small blocks, a low ``hot_df`` and a small ``group_span``
+    make hot terms split into several doc_group salts, and a small
+    ``shard_span`` splits blocks at shard edges, in both tiers."""
+    import hashlib
+
+    from cs_search_engine_architecture_spark.sources.corpus import (
+        synth_source_files,
     )
-    old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        a = str(tmp_path / "stream")
-        b = str(tmp_path / "group")
-        indexer.build_index(
-            spark, corpus, a, fields=["title", "body"], block_size=3,
-            num_buckets=4, hot_df=4, group_span=8, shard_span=16,
-            encode_mode="stream",
-        )
-        indexer.build_index(
-            spark, corpus, b, fields=["title", "body"], block_size=3,
-            num_buckets=4, hot_df=4, group_span=8, shard_span=16,
-            encode_mode="group",
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", old_batch
-        )
+
+    corpus = synth_source_files(spark, 300, seed=11, parallelism=3)
+    out = str(tmp_path / "golden")
+    indexer.build_index(
+        spark, corpus.where("doc_id < 280"), out, fields=["path", "content"],
+        block_size=16, num_buckets=4, hot_df=8, group_span=48, shard_span=64,
+    )
+    indexer.add_docs(spark, out, corpus.where("doc_id >= 280"))
     cols = [c.split()[0] for c in indexer.BLOCKS_SCHEMA.split(", ")]
-    ra = sorted(
-        tuple(r[c] for c in cols)
-        for r in indexer.load_blocks(spark, a).collect()
-    )
-    rb = sorted(
-        tuple(r[c] for c in cols)
-        for r in indexer.load_blocks(spark, b).collect()
-    )
-    assert ra == rb and len(ra) > 10
+    cols.append("term_bucket")
+    digest = hashlib.sha256()
+    for tier in (indexer.load_base_blocks, indexer.load_delta_blocks):
+        rows = sorted(
+            tuple(r[c] for c in cols) for r in tier(spark, out).collect()
+        )
+        assert len(rows) > 10
+        assert any(r[1] >> 32 for r in rows)  # some hot term is salted
+        digest.update(repr(rows).encode())
+    assert digest.hexdigest() == GOLDEN_BLOCKS_SHA256
 
 
 def test_missing_term_empty(built):

@@ -7,6 +7,7 @@ zero-posting docs."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 
 from cs_search_engine_architecture_spark.engine import SearchEngine
 from cs_search_engine_architecture_spark.operators import indexer
+from cs_search_engine_architecture_spark.operators.fsck import fsck_index
 
 DOCS = [
     (0, "spark shuffle wide plans"),
@@ -77,19 +79,26 @@ def test_add_docs_slot_skips_live_ingest_namespace(spark, tmp_path):
 
 def test_compact_preserves_block_layout_config(spark, tmp_path):
     """compact_index defaults every build parameter to the OLD meta —
-    including the layout knobs (wand_shard_span/group_span/hot_df/
-    encode_mode), where shard_span=None is a deliberate choice that
-    must not silently revert to the default span."""
+    including the layout knobs (wand_shard_span/group_span/hot_df),
+    where shard_span=None is a deliberate choice that must not silently
+    revert to the default span. A meta.json written by an older build
+    that still names its block encoder (``encode_mode``, a key no
+    longer read) must load, pass fsck and compact."""
     out = _build(spark, tmp_path, shard_span=None, hot_df=1 << 10)
     meta = indexer.load_meta(out)
     assert meta["wand_shard_span"] is None
+    meta["encode_mode"] = "stream"
+    with open(os.path.join(out, "meta.json"), "w") as fh:
+        json.dump(meta, fh)
+    assert fsck_index(spark, out)["ok"]
     out2 = str(tmp_path / "idx2")
     indexer.compact_index(spark, out, out2)
     meta2 = indexer.load_meta(out2)
     assert meta2["wand_shard_span"] is None
     assert meta2["hot_df"] == 1 << 10
     assert meta2["group_span"] == meta["group_span"]
-    assert meta2["encode_mode"] == meta["encode_mode"]
+    assert "encode_mode" not in meta2
+    assert fsck_index(spark, out2)["ok"]
 
 
 def test_build_rejects_out_of_domain_doc_ids(spark, tmp_path):

@@ -254,6 +254,27 @@ def test_embedding_bucketed_dedup(spark):
     assert pairs <= exact
 
 
+def test_embedding_dup_pairs_zero_norm_never_pairs(spark):
+    """A zero-norm vector never pairs (its cosine is undefined): the
+    fused kernel and the join path agree, even at a threshold every
+    defined cosine passes."""
+    v = [float((i % 7) - 3) for i in range(64)]
+    emb = spark.createDataFrame(
+        [(0, [0.0] * 64), (1, [0.0] * 64), (2, v), (3, [2 * x for x in v])],
+        "vec_id long, embedding array<float>",
+    )
+    got = {
+        kernel: sorted(
+            (r["id_a"], r["id_b"], r["cos"])
+            for r in DD.embedding_dup_pairs_bucketed(
+                emb, min_cosine=-1.0, kernel=kernel
+            ).collect()
+        )
+        for kernel in (True, False)
+    }
+    assert got[True] == got[False] == [(2, 3, 1.0)]
+
+
 # ------------------------------------------------------- similarity
 
 def test_brute_force_vs_lsh_topk(spark):

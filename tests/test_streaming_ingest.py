@@ -92,6 +92,13 @@ def test_compact_is_rerunnable(spark):
     )
     meta = ing.compact()
     assert meta["num_documents"] == 500
+    # the previous test ran a build_index in this session after its own
+    # compact(): none of that build's phase walls (its tokenize stage)
+    # may leak into this index's meta
+    assert set(meta["phase_walls"]) == {
+        "global_stats", "term_stats_write", "score_encode_write",
+        "doc_lens_write",
+    }
     eng = SearchEngine(spark, idx, cache=False)
     assert len(eng.search_collect("spark", 5)) == 5
 
